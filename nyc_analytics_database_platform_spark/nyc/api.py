@@ -1,11 +1,13 @@
 """The reference's end-user query API, engine-native (SURVEY.md section 2.11).
 
 Each function mirrors a server.py entry point, with the same response shape
-and edge-case semantics, but computed as one or two Spark jobs instead of
+and edge-case semantics, but computed as a few batched collects instead of
 serial SQL round-trips:
 
-- bbl_summary       <- get_bbl_data (server.py:130-256; 5 round-trips -> 2 jobs)
-- bbl_trends        <- get_time_series_data + month spine (server.py:259-342)
+- bbl_summary       <- get_bbl_data (server.py:130-256; 5 round-trips -> 3
+                       collects: parcel lookup, 311 by type, sale rows)
+- bbl_trends        <- get_time_series_data + month spine (server.py:259-342;
+                       2 collects: parcel lookup, per-month aggregate)
 - analytics         <- /analytics route (server.py:383-432)
 - compare           <- /compare route (server.py:435-473) - returns a typed
                        error for an unresolvable address instead of crashing
@@ -20,7 +22,9 @@ construction); all heavy lifting stays distributed.
 
 from __future__ import annotations
 
+import statistics
 from dataclasses import dataclass
+from datetime import datetime
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,8 +62,14 @@ class GeocodeError(Exception):
         return f"could not geocode address: {self.address!r}"
 
 
-def _lookup_geo(tables: dict[str, DataFrame], b: int, bl: int, l: int):
-    """Natural-key point lookup (reference: server.py:135-152)."""
+def _resolve(tables: dict[str, DataFrame], bbl: str) -> tuple[Any, str] | None:
+    """BBL parse + natural-key geographic_area point lookup (reference:
+    server.py:118-152): (geographic_id, borough_name), or None for a
+    malformed or unknown parcel."""
+    parsed = parse_bbl(bbl)
+    if parsed is None:
+        return None
+    b, bl, l = parsed
     rows = (
         tables["geographic_area"]
         .filter(
@@ -70,7 +80,7 @@ def _lookup_geo(tables: dict[str, DataFrame], b: int, bl: int, l: int):
         .select("geographic_id", "borough_name")
         .collect()
     )
-    return rows[0] if rows else None
+    return tuple(rows[0]) if rows else None
 
 
 def _date_filtered(df: DataFrame, col: str, start: str | None, end: str | None) -> DataFrame:
@@ -82,6 +92,30 @@ def _date_filtered(df: DataFrame, col: str, start: str | None, end: str | None) 
     return df
 
 
+def _parcel_requests(
+    tables: dict[str, DataFrame], gid: Any, start: str | None, end: str | None
+) -> DataFrame:
+    """The parcel's service_request rows inside the window."""
+    return _date_filtered(
+        tables["service_request"].filter(F.col("geographic_id") == gid),
+        "created_date",
+        start,
+        end,
+    )
+
+
+def _parcel_sales(
+    tables: dict[str, DataFrame], gid: Any, start: str | None, end: str | None
+) -> DataFrame:
+    """The parcel's sales inside the window, each with its property's address."""
+    return _date_filtered(tables["sale"], "sale_date", start, end).join(
+        tables["property"]
+        .filter(F.col("geographic_id") == gid)
+        .select("property_id", "property_address"),
+        "property_id",
+    )
+
+
 def bbl_summary(
     spark: SparkSession,
     tables: dict[str, DataFrame],
@@ -91,24 +125,16 @@ def bbl_summary(
 ) -> dict[str, Any] | None:
     """get_bbl_data parity (server.py:130-256). The reference's five
     sequential queries collapse into: one SR pass (totals + by-type via
-    grouping) and one Sale pass (rows + stats share a cached join)."""
-    parsed = parse_bbl(bbl)
-    if parsed is None:
+    grouping) and one sale-rows collect, whose prices give the stats."""
+    parcel = _resolve(tables, bbl)
+    if parcel is None:
         return None
-    geo = _lookup_geo(tables, *parsed)
-    if geo is None:
-        return None
-    gid = geo["geographic_id"]
+    gid, borough_name = parcel
 
     # --- service requests: totals + by-type in one pass over one scan
-    sr = _date_filtered(
-        tables["service_request"].filter(F.col("geographic_id") == gid),
-        "created_date",
-        start,
-        end,
-    )
     by_type = (
-        sr.join(F.broadcast(tables["complaint_type"]), "complaint_type_id")
+        _parcel_requests(tables, gid, start, end)
+        .join(F.broadcast(tables["complaint_type"]), "complaint_type_id")
         .groupBy("complaint_type_name")
         .agg(
             F.count("*").alias("count"),
@@ -122,21 +148,10 @@ def bbl_summary(
     total_requests = sum(r["count"] for r in by_type)
     active_requests = sum(r["active_count"] for r in by_type)
 
-    # --- sales: detail rows + stats from one cached filtered join
-    sales_df = (
-        _date_filtered(
-            tables["sale"], "sale_date", start, end
-        )
-        .join(
-            tables["property"].filter(F.col("geographic_id") == gid).select(
-                "property_id", "property_address"
-            ),
-            "property_id",
-        )
-        .cache()
-    )
+    # --- sales: detail rows, recent first
     sales_rows = (
-        sales_df.orderBy(F.desc("sale_date"), F.desc("sale_id"))
+        _parcel_sales(tables, gid, start, end)
+        .orderBy(F.desc("sale_date"), F.desc("sale_id"))
         .select(
             F.col("sale_price").cast("double").alias("price"),  # server.py:214
             F.date_format("sale_date", "yyyy-MM-dd").alias("date"),
@@ -144,25 +159,23 @@ def bbl_summary(
         )
         .collect()
     )
-    if sales_rows:
-        stats = sales_df.agg(
-            F.min(F.col("sale_price").cast("double")).alias("min_price"),
-            F.max(F.col("sale_price").cast("double")).alias("max_price"),
-            F.percentile(F.col("sale_price").cast("double"), 0.5).alias("median_price"),
-        ).collect()[0]
+    # sale_price is a non-null DECIMAL (schema.py), so every price is a
+    # finite double. statistics.median halves the middle pair, which rounds
+    # exactly like Spark's percentile(x, 0.5) = 0.5*a + 0.5*b.
+    prices = [r["price"] for r in sales_rows]
+    if prices:
         sale_stats = {
-            "min_price": stats["min_price"],
-            "max_price": stats["max_price"],
-            "median_price": stats["median_price"],
+            "min_price": min(prices),
+            "max_price": max(prices),
+            "median_price": statistics.median(prices),
         }
     else:  # zeroed-stats branch: the reference returns 0, not None/NULL
         # (server.py:237-240 sets median/min/max = 0 when no sales exist)
         sale_stats = {"min_price": 0, "max_price": 0, "median_price": 0}
-    sales_df.unpersist()
 
     return {
         "bbl": bbl,
-        "borough_name": geo["borough_name"],
+        "borough_name": borough_name,
         "total_requests": total_requests,
         "active_requests": active_requests,
         "complaints_by_type": [
@@ -192,71 +205,50 @@ def bbl_trends(
     as an alias for 'service_requests'.
 
     Documented deviation: the spine is calendar months trunc(start)..
-    trunc(end); the reference iterates from the start date keeping its
-    day-of-month (server.py:319-329), which silently drops the final month
-    when day(start) > day(end) and crashes on day-31 starts - both sides
-    agree on the default/whole-month windows the UI issues."""
-    # Validate window bounds FIRST (route-param inputs reach SQL text below;
-    # everything else in this module goes through parameterized F.lit) -
-    # strict %Y-%m-%d, not fromisoformat, which also admits '20240101' /
-    # week-date forms that the SQL date literal would choke on. Malformed
-    # dates raise regardless of whether the parcel exists.
-    from datetime import datetime as _dt
+    trunc(end), empty when end's month precedes start's; the reference
+    iterates from the start date keeping its day-of-month
+    (server.py:319-329), which silently drops the final month when
+    day(start) > day(end) and crashes on day-31 starts - both sides agree
+    on the default/whole-month windows the UI issues."""
+    # Validate window bounds FIRST: route params come from outside the
+    # program. Strict %Y-%m-%d, not fromisoformat, which also admits
+    # '20240101' / week-date forms. Malformed dates raise regardless of
+    # whether the parcel exists.
+    try:
+        first, last = (datetime.strptime(d, "%Y-%m-%d") for d in (start, end))
+    except (TypeError, ValueError) as exc:
+        raise ValueError(f"invalid date window: {start!r}..{end!r}") from exc
 
-    for bound in (start, end):
-        try:
-            _dt.strptime(bound, "%Y-%m-%d")
-        except (TypeError, ValueError) as exc:
-            raise ValueError(f"invalid date window: {start!r}..{end!r}") from exc
-
-    parsed = parse_bbl(bbl)
-    if parsed is None:
+    parcel = _resolve(tables, bbl)
+    if parcel is None:
         return None
-    geo = _lookup_geo(tables, *parsed)
-    if geo is None:
-        return None
-    gid = geo["geographic_id"]
+    gid = parcel[0]
 
     if metric in ("service_requests", "complaints"):
-        fact = _date_filtered(
-            tables["service_request"].filter(F.col("geographic_id") == gid),
-            "created_date",
-            start,
-            end,
-        )
-        agg = fact.groupBy(
-            F.trunc("created_date", "month").alias("month_d")
-        ).agg(F.count("*").alias("count"))
-        with_median = False
+        fact, col = _parcel_requests(tables, gid, start, end), "created_date"
+        gap = {"count": 0}
+        aggs = [F.count("*").alias("count")]
     elif metric == "sales":
-        fact = (
-            _date_filtered(tables["sale"], "sale_date", start, end)
-            .join(
-                tables["property"].filter(F.col("geographic_id") == gid).select("property_id"),
-                "property_id",
-            )
-        )
-        agg = fact.groupBy(F.trunc("sale_date", "month").alias("month_d")).agg(
+        fact, col = _parcel_sales(tables, gid, start, end), "sale_date"
+        gap = {"median_price": None, "count": 0}  # gap months: median NULL
+        aggs = [
             F.percentile(F.col("sale_price").cast("double"), 0.5).alias("median_price"),
             F.count("*").alias("count"),
-        )
-        with_median = True
+        ]
     else:
         raise ValueError(f"unknown metric {metric!r}")
 
+    rows = fact.groupBy(F.date_format(col, "yyyy-MM").alias("month")).agg(*aggs).collect()
+    by_month = {r["month"]: r.asDict() for r in rows}
     # spine over the requested window (server.py:319-329 iterates the window,
     # not the data bounds)
-    spine = spark.sql(
-        f"SELECT explode(sequence(trunc(date'{start}', 'month'), "
-        f"trunc(date'{end}', 'month'), interval 1 month)) AS month_d"
-    )
-    joined = spine.join(agg, "month_d", "left")
-    cols = [F.date_format("month_d", "yyyy-MM").alias("month")]
-    if with_median:
-        cols.append(F.col("median_price"))  # gap months stay NULL
-    cols.append(F.coalesce(F.col("count"), F.lit(0)).alias("count"))
-    out = joined.select(*cols).orderBy("month")
-    return [r.asDict() for r in out.collect()]
+    out = []
+    y, m = first.year, first.month
+    while (y, m) <= (last.year, last.month):
+        month = f"{y:04d}-{m:02d}"
+        out.append(by_month.get(month) or {"month": month, **gap})
+        y, m = (y + 1, 1) if m == 12 else (y, m + 1)
+    return out
 
 
 def analytics(

@@ -275,9 +275,12 @@ def kcore_members(
     handful of waves).
 
     Scale: each round is two node-set semi-joins + one degree aggregate
-    over the CURRENT edge subset, with localCheckpoint truncating lineage
-    exactly like the CC loop. The node set only shrinks, so per-round cost
-    is monotone non-increasing."""
+    over the CURRENT edge subset. Every round's surviving node set is cut
+    from its lineage with an EAGER localCheckpoint, unlike the CC loop's
+    persist -> probe -> lazy-checkpoint sequence: kcore runs a fixed number
+    of rounds with no convergence probe, so the eager checkpoint is each
+    round's one materializing action. The node set only shrinks, so
+    per-round cost is monotone non-increasing."""
     und = edges.select(
         F.col(a_col).alias("node"), F.col(b_col).alias("other")
     ).unionByName(

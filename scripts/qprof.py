@@ -109,8 +109,9 @@ def main() -> None:
     ap.add_argument("--suffix", default=None, help="write <plans-dir>/<name>_<suffix>.txt")
     ap.add_argument("--plans-dir", default=os.path.join(REPO, "plans", "r14"))
     ap.add_argument("--capture-internal", action="store_true",
-                    help="also write internal stage plans hooked by eager "
-                         "composites (plans/<name>__<label>_<suffix>.txt)")
+                    help="also capture internal stage plans hooked by eager "
+                         "composites: written to plans/<name>__<label>_<suffix>.txt "
+                         "with --suffix, else kept in the --out record")
     ap.add_argument("--out", default="/tmp/qprof.json")
     args = ap.parse_args()
 
@@ -122,9 +123,7 @@ def main() -> None:
     # Absorb JVM/codegen startup on the smallest SF (same as bench.py).
     # Guarded: a host without the fixture still profiles --sf (ADVICE r13).
     warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(os.path.join(warm_dir, "region.parquet")) or os.path.exists(
-        os.path.join(warm_dir, "region.parquet")
-    ):
+    if os.path.exists(os.path.join(warm_dir, "region.parquet")):
         load(spark, warm_dir, "region").count()
         for n in names:
             try:
@@ -137,12 +136,11 @@ def main() -> None:
     for n in names:
         rec = profile_one(spark, n, full[n], args.sf, args.reps,
                           capture_internal=args.capture_internal)
-        internal = rec.pop("internal_plans", [])
         if args.suffix:
             os.makedirs(args.plans_dir, exist_ok=True)
             with open(os.path.join(args.plans_dir, f"{n}_{args.suffix}.txt"), "w") as f:
                 f.write(rec["plan"])
-            for label, text in internal:
+            for label, text in rec.pop("internal_plans", []):
                 safe = "".join(c if c.isalnum() or c in "-_" else "-" for c in label)
                 with open(
                     os.path.join(args.plans_dir, f"{n}__{safe}_{args.suffix}.txt"), "w"

@@ -45,6 +45,18 @@ def test_summary_full_parcel(spark, tables):
         "max_price": 1500000.0,
         "median_price": 1050000.0,  # even count -> interpolated
     }
+    one = api.bbl_summary(spark, tables, "1-100-10", "2024-04-01", "2024-04-30")
+    assert one["sale_stats"] == {
+        "min_price": 1500000.0,
+        "max_price": 1500000.0,
+        "median_price": 1500000.0,  # single sale -> itself
+    }
+    odd = api.bbl_summary(spark, tables, "1-100-10", "2024-01-01", "2024-01-31")
+    assert odd["sale_stats"] == {
+        "min_price": 900000.0,
+        "max_price": 1200000.0,
+        "median_price": 1000000.0,  # odd count -> exact middle
+    }
 
 
 def test_summary_zeroed_branches(spark, tables):
@@ -75,6 +87,15 @@ def test_trends_zero_fill_complaints(spark, tables):
     assert by_month["2024-12"] == 0
     # 'complaints' alias keeps working
     assert api.bbl_trends(spark, tables, "1-100-10", metric="complaints") == rows
+    # cross-year window, start day later than end day: calendar months
+    # trunc(start)..trunc(end), the final month included
+    cross = api.bbl_trends(spark, tables, "1-100-10", "2023-11-15", "2024-02-10")
+    assert cross == [
+        {"month": "2023-11", "count": 0},
+        {"month": "2023-12", "count": 1},
+        {"month": "2024-01", "count": 3},
+        {"month": "2024-02", "count": 1},  # 2024-02-14 is past the end
+    ]
 
 
 def test_trends_null_fill_sales_median(spark, tables):
@@ -86,6 +107,13 @@ def test_trends_null_fill_sales_median(spark, tables):
     assert by_month["2024-03"] == (None, 0)  # gap: median null, count zero
     assert by_month["2024-04"] == (1500000.0, 1)
     assert by_month["2024-11"] == (None, 0)
+    cross = api.bbl_trends(spark, tables, "1-100-10", "2023-11-15", "2024-02-10", "sales")
+    assert cross == [
+        {"month": "2023-11", "median_price": None, "count": 0},
+        {"month": "2023-12", "median_price": None, "count": 0},
+        {"month": "2024-01", "median_price": 1000000.0, "count": 3},
+        {"month": "2024-02", "median_price": 800000.0, "count": 1},
+    ]
 
 
 def test_analytics_top5_other_and_first_address(spark, tables):

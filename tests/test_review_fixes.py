@@ -85,6 +85,14 @@ def test_trends_rejects_malformed_dates(spark):
         api.bbl_trends(spark, tables, "1-100-10", start="2024-01-01') --", end="2024-12-31")
 
 
+def test_trends_reversed_window_is_empty(spark):
+    # end's month before start's: the month spine is empty, not a crash
+    tables = nyc_tables(spark)
+    for metric in ("service_requests", "sales"):
+        assert api.bbl_trends(spark, tables, "1-100-10", "2024-03-01", "2024-01-01", metric) == []
+    assert api.bbl_trends(spark, tables, "5-999-999", "2024-03-01", "2024-01-01") is None
+
+
 def test_connected_components_raises_on_non_convergence(spark):
     # a 30-link chain cannot converge in 1 iteration
     edges = spark.createDataFrame(
